@@ -19,8 +19,10 @@ length-prefixed strings/bytes, little-endian IEEE floats, union index
 prefix, block-encoded arrays/maps. Schemas are the same dicts
 mapping/avro_schema.py validates (trivial [null,T] unions only).
 
-Used from ``mapInPandas``/``foreachBatch`` — one Python crossing per
-batch, amortized like every other UDF here.
+The sinks encode through :func:`compile_encoder`, which turns one
+Arrow batch (``mapInArrow``) into a binary column of records with Arrow
+compute and numpy, so records never become Python objects;
+:func:`encode_record` is the per-record reference it is tested against.
 """
 
 from __future__ import annotations
@@ -28,7 +30,11 @@ from __future__ import annotations
 import hashlib
 import json
 import struct
-from typing import Any
+from typing import Any, Callable
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 # --- primitives -------------------------------------------------------------
 
@@ -95,9 +101,11 @@ def _encode_value(avro_type: Any, value: Any) -> bytes:
         if kind == "map":
             if not value:
                 return encode_long(0)
+            # a dict, or the (key, value) pairs Arrow's to_pylist gives
+            items = value.items() if isinstance(value, dict) else value
             body = b"".join(
                 encode_string(k) + _encode_value(avro_type["values"], v)
-                for k, v in value.items()
+                for k, v in items
             )
             return encode_long(len(value)) + body + encode_long(0)
         if kind == "enum":
@@ -131,6 +139,172 @@ def encode_record(schema: dict, record: dict) -> bytes:
         value = record.get(f["name"], f.get("default"))
         out.append(_encode_value(f["type"], value))
     return b"".join(out)
+
+
+# --- vectorized record encoding (Arrow) --------------------------------------
+# The same bytes as encode_record, built for a whole Arrow batch at once:
+# every primitive field becomes one or two binary columns (union tag,
+# varint length or value bytes) and the record is a single element-wise
+# join over all of them. Nested types go through _encode_value per value.
+
+_PRIMITIVES = ("null", "boolean", "int", "long", "float", "double", "string", "bytes")
+_EMPTY = pa.scalar(b"", pa.binary())
+_TRUE = pa.scalar(b"\x01", pa.binary())
+_FALSE = pa.scalar(b"\x00", pa.binary())
+
+
+def _offsets(width: np.ndarray) -> np.ndarray:
+    offsets = np.zeros(len(width) + 1, np.int32)
+    np.cumsum(width, out=offsets[1:])
+    return offsets
+
+
+def _binary_array(offsets: np.ndarray, data: bytes | np.ndarray) -> pa.BinaryArray:
+    return pa.Array.from_buffers(
+        pa.binary(), len(offsets) - 1,
+        [None, pa.py_buffer(offsets), pa.py_buffer(data)],
+    )
+
+
+def _varints(values: np.ndarray, valid: np.ndarray | None = None) -> pa.BinaryArray:
+    """Zigzag varints of an int64 vector; rows where ``valid`` is False
+    get no bytes."""
+    v = values.astype(np.int64, copy=False)
+    z = (v.view(np.uint64) << np.uint64(1)) ^ (v >> 63).view(np.uint64)
+    width = np.ones(len(z), np.int32)
+    rest = z >> np.uint64(7)
+    while rest.any():
+        width += rest != 0
+        rest >>= np.uint64(7)
+    if valid is not None:
+        width[~valid] = 0
+    offsets = _offsets(width)
+    data = np.empty(int(offsets[-1]), np.uint8)
+    for k in range(int(width.max(initial=0))):
+        rows = np.flatnonzero(width > k)
+        byte = (z[rows] >> np.uint64(7 * k)) & np.uint64(0x7F)
+        byte |= (width[rows] > k + 1).astype(np.uint64) << np.uint64(7)
+        data[offsets[rows] + k] = byte
+    return _binary_array(offsets, data)
+
+
+def _numpy(col: pa.Array, arrow_type: pa.DataType, dtype: str):
+    """(values with nulls as 0, validity mask or None) of ``col``."""
+    col = col.cast(arrow_type)
+    valid = None
+    if col.null_count:
+        valid = col.is_valid().to_numpy(zero_copy_only=False)
+        col = col.fill_null(0)
+    return col.to_numpy(zero_copy_only=False).astype(dtype, copy=False), valid
+
+
+def _fixed_width(values: np.ndarray, valid: np.ndarray | None) -> pa.BinaryArray:
+    width = np.full(len(values), values.dtype.itemsize, np.int32)
+    if valid is not None:
+        width[~valid] = 0
+        values = values[valid]
+    return _binary_array(_offsets(width), values.tobytes())
+
+
+def _length_prefixed(col: pa.Array) -> list:
+    col = col.cast(pa.binary())
+    # null rows get no length bytes (_varints) and an empty value
+    prefix = _varints(*_numpy(pc.binary_length(col), pa.int64(), "int64"))
+    return [prefix, col.fill_null(b"") if col.null_count else col]
+
+
+def _primitive_pieces(kind: str, col: pa.Array) -> list:
+    """The pieces of a primitive value's bytes; null rows get none."""
+    if kind == "null":
+        return []
+    if kind == "boolean":
+        out = pc.if_else(col.cast(pa.bool_()), _TRUE, _FALSE)
+        return [out.fill_null(b"") if out.null_count else out]
+    if kind in ("int", "long"):
+        return [_varints(*_numpy(col, pa.int64(), "int64"))]
+    if kind == "float":
+        return [_fixed_width(*_numpy(col, pa.float64(), "<f4"))]
+    if kind == "double":
+        return [_fixed_width(*_numpy(col, pa.float64(), "<f8"))]
+    return _length_prefixed(col)  # string, bytes
+
+
+def _primitive(avro_type: Any) -> str | None:
+    """The primitive type name ``avro_type`` stands for, if any."""
+    if isinstance(avro_type, dict):
+        avro_type = avro_type["type"]
+    return avro_type if avro_type in _PRIMITIVES else None
+
+
+def _field_encoder(avro_type: Any) -> Callable[[pa.Array], list]:
+    """Compile one field type to a function from its column to the
+    pieces (arrays, or scalars broadcast over the batch) of its bytes."""
+    kind = _primitive(avro_type)
+    if kind:
+
+        def required(col: pa.Array) -> list:
+            if col.null_count:
+                if kind != "boolean":
+                    raise ValueError(f"null value for non-null Avro {kind}")
+                col = col.fill_null(False)
+            return _primitive_pieces(kind, col)
+
+        return required
+    if isinstance(avro_type, list) and len(avro_type) == 2 and "null" in avro_type:
+        null_index = avro_type.index("null")
+        branch = _primitive(avro_type[1 - null_index])
+        if branch:
+            null_tag = pa.scalar(encode_long(null_index), pa.binary())
+            tag = pa.scalar(encode_long(1 - null_index), pa.binary())
+
+            def nullable(col: pa.Array) -> list:
+                if col.null_count:
+                    tag_col = pc.if_else(col.is_valid(), tag, null_tag)
+                else:
+                    tag_col = tag
+                return [tag_col, *_primitive_pieces(branch, col)]
+
+            return nullable
+
+    def nested(col: pa.Array) -> list:
+        return [
+            pa.array(
+                [_encode_value(avro_type, v) for v in col.to_pylist()], pa.binary()
+            )
+        ]
+
+    return nested
+
+
+def compile_encoder(schema: dict) -> Callable[[pa.RecordBatch], pa.BinaryArray]:
+    """Compile a record schema to a function from a ``pa.RecordBatch``
+    to a ``pa.BinaryArray`` holding each row's binary-Avro record,
+    byte-identical to :func:`encode_record` on the row as a dict.
+
+    Columns are looked up by field name (extra columns are ignored); a
+    field without a column takes its schema default."""
+    fields = [
+        (f["name"], f.get("default"), _field_encoder(f["type"]))
+        for f in schema["fields"]
+    ]
+
+    def encode(batch: pa.RecordBatch) -> pa.BinaryArray:
+        n = batch.num_rows
+        pieces = []
+        for name, default, field in fields:
+            i = batch.schema.get_field_index(name)
+            if i >= 0:
+                col = batch.column(i)
+            elif default is None:
+                col = pa.nulls(n)
+            else:
+                col = pa.array([default] * n)
+            pieces.extend(field(col))
+        if not pieces:
+            return pa.repeat(_EMPTY, n)
+        return pc.binary_join_element_wise(*pieces, _EMPTY)
+
+    return encode
 
 
 def _decode_value(avro_type: Any, buf: bytes, pos: int) -> tuple[Any, int]:
@@ -301,6 +475,20 @@ def container_block(schema: dict, records: list[dict], sync_marker: bytes) -> by
     body = b"".join(encode_record(schema, r) for r in records)
     return b"".join(
         [encode_long(len(records)), encode_long(len(body)), body, sync_marker]
+    )
+
+
+def encoded_block(encoded: pa.BinaryArray, sync_marker: bytes) -> bytes:
+    """One OCF block over records already encoded by
+    :func:`compile_encoder`: the block body is the slice of the array's
+    data buffer that its rows span."""
+    _, offsets, data = encoded.buffers()
+    offsets = np.frombuffer(offsets, np.int32)
+    start = int(offsets[encoded.offset])
+    end = int(offsets[encoded.offset + len(encoded)])
+    body = data.slice(start, end - start)
+    return b"".join(
+        [encode_long(len(encoded)), encode_long(end - start), body, sync_marker]
     )
 
 

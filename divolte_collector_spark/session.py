@@ -22,9 +22,6 @@ import time
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-
 def _external_master() -> str | None:
     """Detect a master configured outside this factory.
 
@@ -58,7 +55,8 @@ def _external_master() -> str | None:
 
 
 def get_spark(app_name: str = "divolte-collector-spark", cpus: str | None = None) -> SparkSession:
-    cpus = cpus or DEFAULT_CPUS
+    # read at call time: a value set after import must still count
+    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
     # shuffle.partitions must be numeric even when cpus is 'local[*]''s
     # wildcard; and a builder-set master would OVERRIDE spark-submit's
     # --master, silently running a cluster job single-JVM on the driver

@@ -149,9 +149,10 @@ def decode_kafka_events(
 
     ``verify_key=True`` adds a ``_key_matches`` column checking the
     producer contract (message key == UTF-8 party id,
-    DivolteIdentifierSerializer.java) — a consumer-side audit that a
-    repartitioned/republished topic hasn't broken per-party ordering
-    guarantees.
+    DivolteIdentifierSerializer.java; a null party goes with a null
+    key) — a consumer-side audit that a repartitioned/republished topic
+    hasn't broken per-party ordering guarantees. It is null for a
+    record that could not be decoded.
     """
     if mode not in ("naked", "confluent"):
         raise ValueError(f"unknown kafka source mode: {mode}")
@@ -195,12 +196,14 @@ def decode_kafka_events(
                         expected_confluent_id is not None
                         and sid != expected_confluent_id
                     )
-                try:
-                    if wrong_id:
-                        rec = {n: None for n in names}
-                    else:
+                rec = None
+                if not wrong_id:
+                    try:
                         rec = decode_record(schema, buf)
-                except Exception:
+                    except Exception:
+                        pass
+                decoded = rec is not None
+                if not decoded:
                     rec = {n: None for n in names}
                 if mode == "confluent":
                     rec["_schema_id"] = sid
@@ -209,12 +212,18 @@ def decode_kafka_events(
                 rec["_offset"] = off
                 rec["_timestamp"] = ts
                 if verify_key:
+                    # a null party is keyed null (kafka_frame); an
+                    # undecodable record has no party to check
                     party = rec.get("party_id")
-                    rec["_key_matches"] = (
-                        None
-                        if party is None
-                        else key is not None and bytes(key).decode("utf-8", "replace") == party
-                    )
+                    if not decoded:
+                        rec["_key_matches"] = None
+                    elif party is None:
+                        rec["_key_matches"] = key is None
+                    else:
+                        rec["_key_matches"] = (
+                            key is not None
+                            and bytes(key).decode("utf-8", "replace") == party
+                        )
                 rows.append(rec)
             yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
 

@@ -37,16 +37,16 @@ from __future__ import annotations
 import os
 from typing import Callable, Iterator
 
-import pandas as pd
-
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from divolte_collector_spark.functions.avro_codec import (
-    container_block,
+    compile_encoder,
     container_header,
     default_sync_marker,
+    encode_record,
+    encoded_block,
 )
 
 PART_CLASSIFIER = ".part"
@@ -127,23 +127,32 @@ class GcsAvroFile:
         self.inflight_name = f"{inflight_dir}/{name}{inflight_suffix}"
         self.part_name = self.inflight_name + PART_CLASSIFIER
         self.publish_name = f"{publish_dir}/{name}"
-        self.buffer: list[dict] = []
+        # encoded records (compile_encoder output) awaiting the next sync
+        self.buffer: list[pa.BinaryArray] = []
+        self.buffered = 0
         self.part_written = False
         self.record_count = 0
         # the writer uploads the header immediately on create
         store.upload(self.inflight_name, container_header(schema, self.sync))
 
     def append(self, record: dict) -> None:
-        self.buffer.append(record)
-        self.record_count += 1
+        """Buffer one plain-dict record."""
+        record = encode_record(self.schema, record)
+        self.append_encoded(pa.array([record], pa.binary()))
+
+    def append_encoded(self, records: pa.BinaryArray) -> None:
+        self.buffer.append(records)
+        self.buffered += len(records)
+        self.record_count += len(records)
 
     def _write_buffer_and_compose(self, dest: str) -> None:
-        if self.buffer:
+        if self.buffered:
             self.store.upload(
                 self.part_name,
-                container_block(self.schema, self.buffer, self.sync),
+                encoded_block(pa.concat_arrays(self.buffer), self.sync),
             )
             self.buffer = []
+            self.buffered = 0
             self.part_written = True
             sources = [self.inflight_name, self.part_name]
         else:
@@ -268,30 +277,28 @@ def gcs_write_avro_files(
     (roll bucket, partition), reference naming, empties discarded —
     the GCS twin of ``write_avro_files``. The store factory runs once
     per executor partition (HTTP clients don't serialize)."""
-    columns = [f["name"] for f in schema["fields"]]
-    out_schema = T.StructType(
-        [T.StructField("file", T.StringType()), T.StructField("n", T.LongType())]
+    from divolte_collector_spark.streaming.sinks import (
+        MANIFEST,
+        roll_file_name,
+        roll_runs,
     )
+
     bucketed = batch_df.withColumn(
         "_roll", F.date_format(F.col(roll_column), "yyyyMMddHHmmss")
     )
 
-    def write_partition(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def write_partition(iterator: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
-
-        from divolte_collector_spark.streaming.sinks import (
-            _record,
-            roll_file_name,
-        )
 
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx else 0
         attempt = f".a{ctx.taskAttemptId()}" if ctx else ""
         store = store_factory()
+        encode = compile_encoder(schema)
         files: dict[str, GcsAvroFile] = {}
         try:
-            for pdf in iterator:
-                for roll, group in pdf.groupby("_roll", sort=False):
+            for batch in iterator:
+                for roll, records in roll_runs(batch, encode(batch)):
                     if roll not in files:
                         name = roll_file_name(roll, host_string, batch_tag, pid)
                         files[roll] = GcsAvroFile(
@@ -299,9 +306,12 @@ def gcs_write_avro_files(
                             inflight_suffix=attempt,
                         )
                     f = files[roll]
-                    for row in group.to_dict("records"):
-                        f.append(_record(row, columns))
-                        if len(f.buffer) >= sync_every:
+                    # every part holds exactly sync_every records
+                    while len(records):
+                        room = max(sync_every - f.buffered, 1)
+                        f.append_encoded(records.slice(0, room))
+                        records = records.slice(room)
+                        if f.buffered >= sync_every:
                             f.sync_file()
             names, counts = [], []
             for f in files.values():
@@ -315,11 +325,11 @@ def gcs_write_avro_files(
             for f in files.values():
                 f.discard()
             raise
-        yield pd.DataFrame({"file": names, "n": counts})
+        yield pa.RecordBatch.from_pydict({"file": names, "n": counts}, schema=MANIFEST)
 
     manifest = (
         bucketed.repartition("_roll")
-        .mapInPandas(write_partition, out_schema)
+        .mapInArrow(write_partition, "file string, n long")
         .collect()
     )
     # batch is complete: sweep inflight chains abandoned by

@@ -1,16 +1,18 @@
 """Sinks (reference §2.14 K1-K4), Spark-first.
 
+Every sink encodes each record once (AvroRecordBuffer.java:93-112):
+``mapInArrow`` hands each Arrow batch to one ``compile_encoder`` call,
+and the sinks only frame the binary column it returns.
+
 K1/K2 (HDFS/GCS Avro files): the reference appends pre-encoded records
 to ``<name>.partial`` working files, syncs every 1000 records / 30 s,
 rolls hourly, then atomically renames into the publish dir, discarding
 empties (FileFlusher.java:183-208, HdfsFileManager.java:79-127,
-FileStrategyConfiguration.java:31-43). Spark's streaming file sink
-already implements the same commit protocol (task temp file → atomic
-rename + manifest); the roll interval maps to the trigger cadence plus
-a time-bucket partition column. Parquet is the storage format here —
-the spark-avro connector jar is not present in this environment, and
-at 100 TB the columnar format is what a Spark consumer wants anyway;
-record-level binary-Avro parity lives in ``kafka_frame`` below.
+FileStrategyConfiguration.java:31-43). ``write_avro_files`` /
+``avro_file_sink`` write true Avro object container files under that
+lifecycle (one block per roll bucket per Arrow batch); the GCS twin is
+``streaming/gcs.py``. ``file_sink`` is a Parquet alternative on Spark's
+own streaming file sink for consumers that want columnar files.
 
 K3 (Kafka): ``ProducerRecord(topic, key=partyId, value=avro)``, naked
 or Confluent-framed (KafkaFlusher.java:53-101, serializers). The
@@ -30,37 +32,42 @@ from __future__ import annotations
 import base64
 from typing import Iterator
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter
 
 from divolte_collector_spark.functions.avro_codec import (
+    compile_encoder,
     confluent_frame,
-    container_block,
     container_header,
     default_sync_marker,
-    encode_record,
+    encoded_block,
     schema_fingerprint_sha256,
 )
 
-
-def _clean(v):
-    """Arrow->pandas turns a null value in a numeric column into NaN
-    (and a null timestamp into NaT), which is NOT None — encode_record
-    would then take the non-null union branch and int(nan) raises,
-    aborting the whole micro-batch for one null field. Map the pandas
-    missing sentinels back to None before encoding."""
-    if v is None or v is pd.NaT:
-        return None
-    if isinstance(v, float) and v != v:  # NaN
-        return None
-    return v
+#: the (file, record count) rows each file-writing task returns
+MANIFEST = pa.schema([("file", pa.string()), ("n", pa.int64())])
 
 
-def _record(row: dict, columns: list[str]) -> dict:
-    return {c: _clean(row.get(c)) for c in columns}
+def roll_runs(
+    batch: pa.RecordBatch, encoded: pa.BinaryArray
+) -> Iterator[tuple[str, pa.BinaryArray]]:
+    """(roll bucket, encoded records) for each ``_roll`` value in the
+    batch, rows in batch order within a bucket (stable sort).
+
+    Known defect: rows with a null roll bucket (a null roll column) are
+    dropped here with no file, count or error, so the file sinks lose
+    them silently; the pandas ``groupby`` this replaced did the same."""
+    order = pc.sort_indices(batch.column("_roll"))
+    runs = pc.run_end_encode(batch.column("_roll").take(order))
+    encoded = encoded.take(order)
+    start = 0
+    for end, roll in zip(runs.run_ends.to_pylist(), runs.values.to_pylist()):
+        if roll is not None:
+            yield roll, encoded.slice(start, end - start)
+        start = end
 
 
 def file_sink(
@@ -123,44 +130,37 @@ def write_avro_files(
     (FileFlusher.java:54,262) with the roll bucket as the date part and
     the partition id as the instance number.
 
-    Scale: the encode+write runs inside ``mapInPandas`` on the
+    Scale: the encode+write runs inside ``mapInArrow`` on the
     executors — each partition streams its own container file to
-    (shared) storage, appending one OCF BLOCK per Arrow chunk as it
-    arrives (the container format is block-appendable), so worker
-    memory is bounded by the Arrow batch size, never by the roll
+    (shared) storage, appending one OCF BLOCK per roll bucket per Arrow
+    batch as it arrives (the container format is block-appendable), so
+    worker memory is bounded by the Arrow batch size, never by the roll
     bucket; the driver only collects the (filename, count) manifest.
     At 100 TB nothing funnels through the driver and nothing buffers
-    a whole bucket.
+    a whole bucket. A block is a slice of the batch's encoded records,
+    so records never become Python objects.
     """
     import os
 
-    columns = [f["name"] for f in schema["fields"]]
-    out_schema = T.StructType(
-        [T.StructField("file", T.StringType()), T.StructField("n", T.LongType())]
-    )
     bucketed = batch_df.withColumn(
         "_roll", F.date_format(F.col(roll_column), "yyyyMMddHHmmss")
     )
     sync = default_sync_marker(schema)
 
-    def write_partition(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def write_partition(iterator: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId() if TaskContext.get() else 0
         os.makedirs(path, exist_ok=True)
+        encode = compile_encoder(schema)
         # roll -> (open .partial handle, published name, record count);
         # the header goes out when the first record for a roll arrives,
-        # then every Arrow chunk appends one block and is dropped
-        open_files: dict[str, tuple] = {}
+        # then every Arrow batch appends one block per roll
+        open_files: dict[str, list] = {}
         published: set[str] = set()
         try:
-            for pdf in iterator:
-                for roll, group in pdf.groupby("_roll", sort=False):
-                    records = [
-                        _record(row, columns) for row in group.to_dict("records")
-                    ]
-                    if not records:
-                        continue
+            for batch in iterator:
+                for roll, records in roll_runs(batch, encode(batch)):
                     if roll not in open_files:
                         name = roll_file_name(
                             roll, host_string, batch_tag, pid
@@ -169,7 +169,7 @@ def write_avro_files(
                         fh.write(container_header(schema, sync))
                         open_files[roll] = [fh, name, 0]
                     entry = open_files[roll]
-                    entry[0].write(container_block(schema, records, sync))
+                    entry[0].write(encoded_block(records, sync))
                     entry[2] += len(records)
             names: list[str] = []
             counts: list[int] = []
@@ -200,13 +200,15 @@ def write_avro_files(
                     os.unlink(os.path.join(path, name + ".partial"))
                 except OSError:
                     pass
-        yield pd.DataFrame({"file": names, "n": counts})
+        yield pa.RecordBatch.from_pydict({"file": names, "n": counts}, schema=MANIFEST)
 
     # repartition on the roll bucket so each bucket lands in few
     # partitions (few output files per roll), matching the one-file-
     # per-roll-per-writer layout of the reference's flusher threads
     manifest = (
-        bucketed.repartition("_roll").mapInPandas(write_partition, out_schema).collect()
+        bucketed.repartition("_roll")
+        .mapInArrow(write_partition, "file string, n long")
+        .collect()
     )
     return [(r["file"], r["n"]) for r in manifest]
 
@@ -254,34 +256,28 @@ def kafka_frame(
 ) -> DataFrame:
     """Project a mapped-event DataFrame into Kafka (key, value) bytes.
 
-    key = UTF-8 party id (DivolteIdentifierSerializer.java); value =
-    binary Avro record, optionally Confluent-framed. Works on batch and
-    streaming DataFrames; the record encode happens once per event and
-    fans out — the AvroRecordBuffer serialize-once discipline.
+    key = UTF-8 party id (DivolteIdentifierSerializer.java), null for a
+    null party; value = binary Avro record, optionally Confluent-framed.
+    Works on batch and streaming DataFrames; the record encode happens
+    once per event and fans out — the AvroRecordBuffer serialize-once
+    discipline.
     """
     if mode not in ("naked", "confluent"):
         raise ValueError(f"unknown kafka sink mode: {mode}")  # KafkaSinkMode.java:32-34
     if mode == "confluent" and confluent_id is None:
         raise ValueError("confluent mode requires a schema id")
-    columns = [f["name"] for f in schema["fields"]]
 
-    out_schema = T.StructType(
-        [T.StructField("key", T.StringType()), T.StructField("value", T.BinaryType())]
-    )
+    def encode(iterator: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        encoder = compile_encoder(schema)
+        for batch in iterator:
+            value = encoder(batch)
+            if mode == "confluent":
+                frame = confluent_frame(confluent_id, b"")
+                value = pc.binary_join_element_wise(frame, value, b"")
+            key = batch.column(key_col).cast(pa.string()).cast(pa.binary())
+            yield pa.RecordBatch.from_arrays([key, value], ["key", "value"])
 
-    def encode(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in iterator:
-            vals = []
-            for row in pdf.to_dict("records"):
-                body = encode_record(schema, _record(row, columns))
-                if mode == "confluent":
-                    body = confluent_frame(confluent_id, body)
-                vals.append(body)
-            yield pd.DataFrame({"key": pdf[key_col].astype(str), "value": vals})
-
-    return df.mapInPandas(encode, out_schema).select(
-        F.col("key").cast("binary").alias("key"), "value"
-    )
+    return df.mapInArrow(encode, "key binary, value binary")
 
 
 def pubsub_messages(
@@ -292,40 +288,32 @@ def pubsub_messages(
     eventIdentifier, ISO-instant timestamp, base64url schema
     fingerprint, and — when the schema is registry-backed — the
     optional ``schemaConfluentId`` attribute as ``0x`` + lowercase hex
-    (:62: ``"0x" + Integer.toHexString(i)``)."""
+    (:62: ``"0x" + Integer.toHexString(i)``). A null party or event id
+    stays null (the attribute is then left out)."""
     fingerprint = base64.urlsafe_b64encode(
         schema_fingerprint_sha256(schema)
     ).decode("ascii")
     confluent_hex = None if confluent_id is None else f"0x{confluent_id:x}"
-    columns = [f["name"] for f in schema["fields"]]
-    out_schema = T.StructType(
-        [
-            T.StructField("data", T.BinaryType()),
-            T.StructField("partyIdentifier", T.StringType()),
-            T.StructField("eventIdentifier", T.StringType()),
-            T.StructField("timestamp", T.StringType()),
-            T.StructField("schemaFingerprint", T.StringType()),
-            T.StructField("schemaConfluentId", T.StringType()),
-        ]
+    out_schema = (
+        "data binary, partyIdentifier string, eventIdentifier string, "
+        "timestamp string, schemaFingerprint string, schemaConfluentId string"
     )
 
-    def encode(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in iterator:
-            data = [
-                encode_record(schema, _record(row, columns))
-                for row in pdf.to_dict("records")
-            ]
-            yield pd.DataFrame(
+    def encode(iterator: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        encoder = compile_encoder(schema)
+        for batch in iterator:
+            n = batch.num_rows
+            instant = batch.column("client_time").cast(pa.timestamp("us", "UTC"))
+            yield pa.RecordBatch.from_pydict(
                 {
-                    "data": data,
-                    "partyIdentifier": pdf["party_id"].astype(str),
-                    "eventIdentifier": pdf["event_id"].astype(str),
-                    "timestamp": pd.to_datetime(pdf["client_time"]).dt.strftime(
-                        "%Y-%m-%dT%H:%M:%S.%fZ"
-                    ),
-                    "schemaFingerprint": fingerprint,
-                    "schemaConfluentId": confluent_hex,
+                    "data": encoder(batch),
+                    "partyIdentifier": batch.column("party_id").cast(pa.string()),
+                    "eventIdentifier": batch.column("event_id").cast(pa.string()),
+                    # %S of a microsecond timestamp carries the fraction
+                    "timestamp": pc.strftime(instant, format="%Y-%m-%dT%H:%M:%SZ"),
+                    "schemaFingerprint": pa.repeat(pa.scalar(fingerprint), n),
+                    "schemaConfluentId": pa.repeat(pa.scalar(confluent_hex, pa.string()), n),
                 }
             )
 
-    return df.mapInPandas(encode, out_schema)
+    return df.mapInArrow(encode, out_schema)

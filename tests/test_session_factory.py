@@ -49,3 +49,39 @@ def test_live_context_master_detected(monkeypatch, spark):
     monkeypatch.delenv("SPARK_MASTER", raising=False)
     monkeypatch.delenv("PYSPARK_SUBMIT_ARGS", raising=False)
     assert _external_master() == spark.sparkContext.master
+
+
+class _RecordingBuilder:
+    """Stands in for ``SparkSession.builder``: records master/config
+    calls and returns them from getOrCreate instead of starting a JVM."""
+
+    def __init__(self):
+        self.calls = {}
+
+    def appName(self, name):
+        return self
+
+    def master(self, master):
+        self.calls["master"] = master
+        return self
+
+    def config(self, key, value):
+        self.calls[key] = value
+        return self
+
+    def getOrCreate(self):
+        return self.calls
+
+
+def test_cpus_env_var_read_when_get_spark_is_called(monkeypatch):
+    from pyspark.sql import SparkSession
+
+    from divolte_collector_spark import session
+
+    # set only after the module was imported
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setattr(session, "_external_master", lambda: None)
+    monkeypatch.setattr(SparkSession, "builder", _RecordingBuilder())
+    calls = session.get_spark("t")
+    assert calls["master"] == "local[3]"
+    assert calls["spark.sql.shuffle.partitions"] == "3"
