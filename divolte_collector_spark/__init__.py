@@ -26,4 +26,10 @@ surface Spark-first:
 
 __version__ = "0.1.0"
 
-from divolte_collector_spark.session import get_spark  # noqa: F401
+# Every Python-worker task imports this package (functions unpickle by
+# reference), so this is where the workers get the cheap zip re-check.
+from divolte_collector_spark import zipcache
+
+zipcache.install()
+
+from divolte_collector_spark.session import get_spark  # noqa: E402,F401

@@ -29,10 +29,6 @@ def try_parse_int64(col: Column) -> Column:
     return F.when(col.rlike(_INT_RE), col.try_cast("long"))
 
 
-def try_parse_fp32(col: Column) -> Column:
-    return col.try_cast("float")
-
-
 def try_parse_fp64(col: Column) -> Column:
     return col.try_cast("double")
 

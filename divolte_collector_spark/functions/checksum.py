@@ -89,11 +89,6 @@ def canonical_checksum_string(entries: Column) -> Column:
     return folded
 
 
-def request_checksum(entries: Column) -> Column:
-    """Signed 32-bit murmur3 checksum of the canonical param string."""
-    return murmur3_32_signed_udf(canonical_checksum_string(entries))
-
-
 def _try_parse_base36_py(s: str | None) -> int | None:
     if s is None:
         return None

@@ -9,6 +9,11 @@ gracefully to local mode:
   bound; at cluster scale raise it to ~2-4x total cores.
 - Arrow execution for the few pandas-UDF code paths (mincode, UA parse,
   vector math) — Arrow batches are the only acceptable Python boundary.
+  Each crossing also costs a fixed amount per task: before Python 3.13
+  PySpark's per-task ``importlib.invalidate_caches()`` re-read every zip
+  archive on the worker's path (~0.2 s per task on 4 vCPUs), which
+  ``zipcache.install()`` cuts to one ``os.stat`` per cached importer;
+  from 3.13 the stock re-read is lazy, so the shim does nothing there.
 - Session timezone pinned to UTC: event timestamps are epoch-derived
   (reference carries epoch-millis longs, DivolteEvent.java:52-53) and
   must not shift with the driver's locale.

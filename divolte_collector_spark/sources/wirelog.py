@@ -76,16 +76,23 @@ def parse_line(line: str):
     )
 
 
+def _parse_raw_line(raw: bytes):
+    """One raw line (no b'\\n') -> parsed row, or None when blank.
+    Decodes on its own (errors='replace'), so a bad byte corrupts only
+    its line, and strips a trailing '\\r' so CRLF logs parse
+    identically to LF logs."""
+    line = raw.decode(errors="replace").rstrip("\r")
+    return parse_line(line) if line.strip() else None
+
+
 def _parse_raw_lines(chunk: bytes):
-    """Split a raw byte chunk on b'\\n' and decode each line on its own
-    (errors='replace'), so a bad byte corrupts only its line and the
-    byte-offset arithmetic stays exact. Strips a trailing '\\r' so CRLF
-    logs parse identically to LF logs."""
+    """Split a raw byte chunk on b'\\n' and parse each line, so the
+    byte-offset arithmetic stays exact."""
     rows = []
     for raw in chunk.split(b"\n"):
-        line = raw.decode(errors="replace").rstrip("\r")
-        if line.strip():
-            rows.append(parse_line(line))
+        row = _parse_raw_line(raw)
+        if row is not None:
+            rows.append(row)
     return rows
 
 
@@ -118,9 +125,13 @@ class _WireLogReader(DataSourceReader):
 
     def read(self, partition: _FilePartition) -> Iterator[tuple]:
         # binary + per-line decode: identical parse to the streaming
-        # tail, so batch backfill and live tail agree byte-for-byte
+        # tail, so batch backfill and live tail agree byte-for-byte;
+        # binary iteration splits on b"\n" only, as the tail does
         with open(partition.path, "rb") as fh:
-            yield from _parse_raw_lines(fh.read())
+            for raw in fh:
+                row = _parse_raw_line(raw[:-1] if raw.endswith(b"\n") else raw)
+                if row is not None:
+                    yield row
 
 
 class WireLogDataSource(DataSource):

@@ -51,22 +51,23 @@ from divolte_collector_spark.functions.avro_codec import (
 MANIFEST = pa.schema([("file", pa.string()), ("n", pa.int64())])
 
 
+#: the roll bucket of rows whose roll column is null (no event time):
+#: they land in ``unknown-divolte-tracking-<host>-<tag>-<pid>.avro``
+UNKNOWN_ROLL = "unknown"
+
+
 def roll_runs(
     batch: pa.RecordBatch, encoded: pa.BinaryArray
 ) -> Iterator[tuple[str, pa.BinaryArray]]:
     """(roll bucket, encoded records) for each ``_roll`` value in the
-    batch, rows in batch order within a bucket (stable sort).
-
-    Known defect: rows with a null roll bucket (a null roll column) are
-    dropped here with no file, count or error, so the file sinks lose
-    them silently; the pandas ``groupby`` this replaced did the same."""
+    batch, rows in batch order within a bucket (stable sort). Null
+    ``_roll`` rows form the :data:`UNKNOWN_ROLL` bucket."""
     order = pc.sort_indices(batch.column("_roll"))
     runs = pc.run_end_encode(batch.column("_roll").take(order))
     encoded = encoded.take(order)
     start = 0
     for end, roll in zip(runs.run_ends.to_pylist(), runs.values.to_pylist()):
-        if roll is not None:
-            yield roll, encoded.slice(start, end - start)
+        yield UNKNOWN_ROLL if roll is None else roll, encoded.slice(start, end - start)
         start = end
 
 
@@ -128,7 +129,8 @@ def write_avro_files(
     are discarded (never published). Naming is the reference's
     ``<yyyyLLddHHmmss>-divolte-tracking-<host>-<instance>.avro``
     (FileFlusher.java:54,262) with the roll bucket as the date part and
-    the partition id as the instance number.
+    the partition id as the instance number; rows with a null roll
+    column go to the :data:`UNKNOWN_ROLL` file and are counted.
 
     Scale: the encode+write runs inside ``mapInArrow`` on the
     executors — each partition streams its own container file to

@@ -250,6 +250,57 @@ def test_gcs_write_avro_files_exact_long(spark, tmp_path):
     assert got == _expected()
 
 
+def test_roll_runs_keeps_null_bucket():
+    from divolte_collector_spark.streaming.sinks import UNKNOWN_ROLL, roll_runs
+
+    batch = pa.record_batch({"_roll": ["b", None, "a", "b"]})
+    encoded = pa.array([b"0", b"1", b"2", b"3"], pa.binary())
+    got = {roll: recs.to_pylist() for roll, recs in roll_runs(batch, encoded)}
+    assert got == {"a": [b"2"], "b": [b"0", b"3"], UNKNOWN_ROLL: [b"1"]}
+
+
+def _null_roll_frame(spark):
+    """Rows whose roll buckets are b, null, a, b (``client_time`` null
+    for e1)."""
+    from pyspark.sql import functions as F
+
+    ms = {"e0": 1500000002000, "e2": 1500000001000, "e3": 1500000002000}
+    when = F.lit(None).cast("long")
+    for eid, t in ms.items():
+        when = F.when(F.col("event_id") == eid, F.lit(t)).otherwise(when)
+    return _frame(spark).withColumn("client_time", F.timestamp_millis(when))
+
+
+def test_write_avro_files_keeps_null_roll_rows(spark, tmp_path):
+    from divolte_collector_spark.streaming.sinks import write_avro_files
+
+    out = str(tmp_path / "out")
+    manifest = write_avro_files(_null_roll_frame(spark), _SCHEMA, out, batch_tag="0")
+    assert sum(n for _, n in manifest) == len(_ROWS)
+    assert any(name.startswith("unknown-divolte-tracking-") for name, _ in manifest)
+    assert _read_files([os.path.join(out, name) for name, _ in manifest]) == _expected()
+
+
+def test_gcs_write_avro_files_keeps_null_roll_rows(spark, tmp_path):
+    from divolte_collector_spark.streaming.gcs import (
+        FilesystemObjectStore,
+        gcs_write_avro_files,
+    )
+
+    root = str(tmp_path / "bucket")
+    manifest = gcs_write_avro_files(
+        _null_roll_frame(spark), _SCHEMA,
+        store_factory=lambda r=root: FilesystemObjectStore(r),
+        batch_tag="0",
+    )
+    assert sum(n for _, n in manifest) == len(_ROWS)
+    store = FilesystemObjectStore(root)
+    got = {}
+    for name, _ in manifest:
+        got.update({r["event_id"]: r for r in read_container(store.get(name))[1]})
+    assert got == _expected()
+
+
 def test_kafka_frame_exact_long_and_null_party(spark):
     from divolte_collector_spark.sources.kafka_source import decode_kafka_events
     from divolte_collector_spark.streaming.sinks import kafka_frame

@@ -163,3 +163,33 @@ def test_stream_recovers_from_in_place_truncation(log_dir):
     rows, off2 = reader.read(off1)
     assert len(list(rows)) == 2  # post-rotation lines ingested, from 0
     assert off2[f] == 2 * len(line)
+
+
+def test_batch_reader_matches_chunk_parse(tmp_path):
+    """The batch reader streams its file line by line and parses exactly
+    what ``_parse_raw_lines`` parses from the whole file: CRLF, a bare
+    ``\\r`` inside a line, invalid UTF-8, blank lines and no final
+    newline."""
+    from divolte_collector_spark.sources.wirelog import (
+        _FilePartition,
+        _parse_raw_lines,
+        _WireLogReader,
+    )
+
+    good = f'2024-01-02T05:00:00 10.1.0.1 "GET /csc-event?{_QS.format(n=1)} HTTP/1.1" "A"'
+    data = b"".join([
+        good.encode() + b"\r\n",
+        b"\n",
+        b"   \r\n",
+        b"left\rright " + good.encode() + b"\n",
+        b"bad \xff\xfe utf8 \xc3\n",
+        good.replace("10.1.0.1", "10.1.0.2").encode() + b"\r\r\n",
+        b"\r\n",
+        good.replace("10.1.0.1", "10.1.0.3").encode(),  # no final newline
+    ])
+    path = tmp_path / "mixed.log"
+    path.write_bytes(data)
+
+    rows = list(_WireLogReader({"path": str(path)}).read(_FilePartition(str(path))))
+    assert rows == _parse_raw_lines(data)
+    assert [r[1] for r in rows] == ["10.1.0.1", None, None, "10.1.0.2", "10.1.0.3"]

@@ -11,29 +11,10 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-HEADLINE = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_regional_revenue",
-    "sessionize_30min",
-    "session_window_native",
-    "funnel_view_click_purchase",
-    "daily_active_users",
-    "asof_last_view_before_purchase",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "knn_bruteforce_cosine",
-    "ann_ivf_bucketed",
-    "text_quality_scores",
-    "token_counts",
-    "browser_wire_roundtrip",
-    "dsl_mapping_segments",
-    "geoip_enrich_events",
-    "multimodal_features",
-]
+from bench import HEADLINE  # noqa: E402
 
 
 def main() -> int:
@@ -52,7 +33,7 @@ def main() -> int:
     spark = get_spark("capture-plans")
     spark.sparkContext.setLogLevel("ERROR")
     registry = all_queries()
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", tag)
+    out_dir = os.path.join(ROOT, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         df = registry[name].fn(spark, sf_dir)
