@@ -28,8 +28,8 @@ Broker semantics emulated faithfully:
   commits data and watermark together) holding the post-batch next
   offsets; base derivation is an elementwise max over the sidecars
   (cached in-process, validated by the committed-dir count so another
-  process's append is always noticed), falling back to a
-  column-pruned (partition, offset) scan for legacy dirs without one.
+  process's append is always noticed). A committed dir without a
+  sidecar is corrupt input: the produce fails with the missing path.
   Produce cost stays O(batch) regardless of topic history.
 - **Single active producer per topic — fenced at the commit point**:
   ``emulated_kafka_sink`` claims the topic (atomic
@@ -54,7 +54,7 @@ Broker semantics emulated faithfully:
 This is harness infrastructure — per-batch driver-side work is one
 listdir + a tiny json read per committed dir (cache-validated) plus a
 per-part-file offset rebase bounded by the batch, never a scan of the
-log history (the legacy pre-sidecar scan runs once, outside the lock).
+log history.
 """
 
 from __future__ import annotations
@@ -139,9 +139,8 @@ WATERMARK_FILE = "_watermark.json"
 _WATERMARK_CACHE: dict[str, tuple[int, dict[int, int]]] = {}
 
 #: breaking threshold for a lock whose holder crashed. Hold times are
-#: bounded by the per-part streaming rebase of ONE batch (the legacy
-#: full-history scan runs OUTSIDE the lock), so a lock this old is a
-#: dead producer, not a slow one.
+#: bounded by the per-part streaming rebase of ONE batch, so a lock
+#: this old is a dead producer, not a slow one.
 _COMMIT_LOCK_STALE_S = 600.0
 
 
@@ -215,11 +214,11 @@ def _break_stale_lock(lock: str) -> None:
 def _commit_lock(topic_dir: str, timeout: float = 900.0):
     """Per-topic commit mutex via atomic ``mkdir`` — held only for the
     driver-side commit tail (sidecar base derivation, per-part offset
-    rebase, rename), never across the Spark job or the legacy history
-    scan. Yields the lock path so the holder can HEARTBEAT long holds
-    (``os.utime`` per rebase part file) — a live holder therefore never
-    looks stale to waiters. The holder writes an ``owner`` token inside
-    the lock dir and releases ONLY its own lock — so breaking a stale
+    rebase, rename), never across the Spark job. Yields the lock path
+    so the holder can HEARTBEAT long holds (``os.utime`` per rebase
+    part file) — a live holder therefore never looks stale to waiters.
+    The holder writes an ``owner`` token inside the lock dir and
+    releases ONLY its own lock — so breaking a stale
     lock can never cascade (the original holder returning late does
     not free the usurper's lock). ``timeout`` > stale threshold, so
     waiters break a crashed holder's lock (verified atomic rename,
@@ -256,31 +255,6 @@ def _commit_lock(topic_dir: str, timeout: float = 900.0):
             pass
 
 
-def _offset_bases_scan(
-    spark: SparkSession, data_dir: str, n_partitions: int
-) -> dict[int, int]:
-    """Legacy full derivation: column-pruned (partition, offset) scan
-    of every committed segment. Only reached for logs written before
-    watermark sidecars existed."""
-    bases = {p: 0 for p in range(n_partitions)}
-    if any(
-        f.endswith(".parquet")
-        for _, _, fs in os.walk(data_dir)
-        for f in fs
-    ):
-        rows = (
-            spark.read.schema(KAFKA_SCAN_SCHEMA)
-            .option("recursiveFileLookup", "true")
-            .parquet(data_dir)
-            .groupBy("partition")
-            .agg((F.max("offset") + 1).alias("n"))
-            .collect()
-        )
-        for r in rows:
-            bases[int(r["partition"])] = int(r["n"])
-    return bases
-
-
 def _committed_dirs(data_dir: str) -> list[str]:
     return sorted(
         e
@@ -290,49 +264,7 @@ def _committed_dirs(data_dir: str) -> list[str]:
     )
 
 
-def _legacy_dirs(data_dir: str) -> tuple[str, ...]:
-    """Committed dirs that predate watermark sidecars."""
-    return tuple(
-        entry
-        for entry in _committed_dirs(data_dir)
-        if not os.path.exists(os.path.join(data_dir, entry, WATERMARK_FILE))
-    )
-
-
-# data_dir -> (legacy dir set at scan time, scanned floor). The legacy
-# set is immutable on an append-only log (every new commit writes a
-# sidecar), so the scanned floor stays a valid lower bound for the
-# life of the process — the full-history Spark scan runs ONCE per
-# data_dir, not once per produce_batch. Keyed validation by the
-# current legacy set so a harness that nukes and recreates the log
-# directory falls back to a fresh scan instead of a stale floor.
-_LEGACY_FLOOR_CACHE: dict[str, tuple[tuple[str, ...], dict[int, int]]] = {}
-
-
-def _legacy_floor(
-    spark: SparkSession, data_dir: str, n_partitions: int
-) -> dict[int, int]:
-    legacy = _legacy_dirs(data_dir)
-    if not legacy:
-        return {p: 0 for p in range(n_partitions)}
-    cached = _LEGACY_FLOOR_CACHE.get(data_dir)
-    if (
-        cached is not None
-        and cached[0] == legacy
-        and len(cached[1]) >= n_partitions
-    ):
-        return dict(cached[1])
-    floor = _offset_bases_scan(spark, data_dir, n_partitions)
-    _LEGACY_FLOOR_CACHE[data_dir] = (legacy, dict(floor))
-    return floor
-
-
-def _offset_bases(
-    spark: SparkSession,
-    data_dir: str,
-    n_partitions: int,
-    legacy_floor: dict[int, int] | None = None,
-) -> dict[int, int]:
+def _offset_bases(data_dir: str, n_partitions: int) -> dict[int, int]:
     """Next offset per partition — crash-consistent by construction:
     an uncommitted batch is invisible to readers, to the sidecars,
     and to this derivation. MUST be called under the topic's commit
@@ -343,15 +275,9 @@ def _offset_bases(
     process changes the count (the log is append-only), forcing an
     elementwise-max re-read of the ``_watermark.json`` sidecars (one
     tiny json read per batch dir, no Spark job — order-free, so it
-    needs no cross-epoch commit ordering). Dirs WITHOUT a sidecar
-    (legacy log) are covered by ``legacy_floor`` — a full-scan result
-    computed OUTSIDE the lock (the legacy dir set is immutable: every
-    new commit writes a sidecar, and offsets only grow, so a floor
-    scanned before the lock stays a valid lower bound however many
-    sidecar-bearing dirs land in between). Only if a legacy dir
-    appears with NO floor provided does the scan run here (bare
-    callers; pushes the Spark job inside the lock — produce_batch
-    always pre-computes the floor to avoid that)."""
+    needs no cross-epoch commit ordering). Every commit renames its
+    sidecar in with its data, so a dir without one is corrupt: the
+    ``open`` raises ``FileNotFoundError`` naming the path."""
     dirs = _committed_dirs(data_dir)
     cached = _WATERMARK_CACHE.get(data_dir)
     if (
@@ -360,25 +286,13 @@ def _offset_bases(
         and len(cached[1]) >= n_partitions
     ):
         return dict(cached[1])
-    bases = dict(legacy_floor) if legacy_floor else {}
-    for p in range(n_partitions):
-        bases.setdefault(p, 0)
-    need_scan = False
+    bases = {p: 0 for p in range(n_partitions)}
     for entry in dirs:
-        path = os.path.join(data_dir, entry)
-        try:
-            with open(os.path.join(path, WATERMARK_FILE)) as fh:
-                wm = json.load(fh)
-        except OSError:
-            if legacy_floor is None:
-                need_scan = True
-                break
-            continue  # legacy dir: covered by the floor
+        with open(os.path.join(data_dir, entry, WATERMARK_FILE)) as fh:
+            wm = json.load(fh)
         for p_str, nxt in wm.items():
             p = int(p_str)
             bases[p] = max(bases.get(p, 0), int(nxt))
-    if need_scan:
-        bases = _offset_bases_scan(spark, data_dir, n_partitions)
     _WATERMARK_CACHE[data_dir] = (len(dirs), dict(bases))
     return bases
 
@@ -445,21 +359,12 @@ def produce_batch(
                 os.unlink(os.path.join(staging, extra))
             except FileNotFoundError:
                 pass
-    # legacy logs (dirs without sidecars) need a Spark history scan;
-    # run it OUTSIDE the lock — the legacy dir set is immutable and
-    # offsets only grow, so the result is a valid floor whenever the
-    # lock is eventually taken (sidecar-bearing dirs committed in
-    # between fold in via the in-lock sidecar max). Cached per
-    # data_dir: the scan runs once per process, not once per batch.
-    legacy_floor = _legacy_floor(spark, data_dir, n_partitions)
     try:
         with _commit_lock(os.path.join(log_dir, topic)) as lock_path:
             if os.path.exists(commit_dir):  # replay raced us to commit
                 shutil.rmtree(staging, ignore_errors=True)
                 return
-            bases = _offset_bases(
-                spark, data_dir, n_partitions, legacy_floor=legacy_floor
-            )
+            bases = _offset_bases(data_dir, n_partitions)
 
             def _heartbeat() -> None:
                 # refresh the lock mtime so a long (many-part) rebase

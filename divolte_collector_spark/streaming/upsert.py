@@ -57,8 +57,6 @@ def _read_pointer(path: str) -> tuple[int, int] | None:
     try:
         with open(os.path.join(path, _CURRENT)) as fh:
             parts = fh.read().split()
-            if len(parts) == 1:  # legacy single-number pointer
-                return int(parts[0]), int(parts[0])
             return int(parts[0]), int(parts[1])
     except (FileNotFoundError, ValueError, IndexError):
         # IndexError: a zero-length pointer (crash between replace and

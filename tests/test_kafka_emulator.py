@@ -206,12 +206,13 @@ def test_new_producer_epoch_appends_despite_restarting_batch_ids(
         assert sorted(offsets) == list(range(len(offsets)))
 
 
-def test_offset_bases_o_batch_after_warmup(spark, tmp_path, monkeypatch):
+def test_offset_bases_o_batch_after_warmup(spark, tmp_path):
     """Producing to a many-segment topic must NOT re-scan the committed
     log per batch: the first derivation reads the watermark sidecars
-    (no Spark scan when every dir has one), and subsequent produces in
-    the same process use the in-memory watermark — O(batch) regardless
-    of topic history."""
+    (no Spark scan), and subsequent produces in the same process use
+    the in-memory watermark — O(batch) regardless of topic history."""
+    import os
+
     import divolte_collector_spark.sources.kafka_emulator as ke
     from divolte_collector_spark.streaming.sinks import kafka_frame
 
@@ -221,15 +222,17 @@ def test_offset_bases_o_batch_after_warmup(spark, tmp_path, monkeypatch):
     for b in range(5):  # build a multi-segment history
         produce_batch(spark, framed, log, "t", batch_id=b, n_partitions=3)
 
-    # fresh process simulation: drop the in-memory watermark, then
-    # forbid the legacy full scan — sidecars alone must suffice
+    # fresh process simulation: drop the in-memory watermark, so the
+    # next derivation re-reads the sidecars
     ke._WATERMARK_CACHE.clear()
-    def _no_scan(*a, **k):
-        raise AssertionError("legacy full-log scan must not run")
-    monkeypatch.setattr(ke, "_offset_bases_scan", _no_scan)
     produce_batch(spark, framed, log, "t", batch_id=5, n_partitions=3)
     produce_batch(spark, framed, log, "t", batch_id=6, n_partitions=3)
 
+    data_dir = ke._data_dir(log, "t")
+    dirs = ke._committed_dirs(data_dir)
+    assert len(dirs) == 7
+    for d in dirs:  # the same rename commits data and sidecar
+        assert os.path.isfile(os.path.join(data_dir, d, ke.WATERMARK_FILE))
     rows = read_topic(spark, log, "t").collect()
     assert len(rows) == 140
     by_partition = {}
@@ -241,32 +244,48 @@ def test_offset_bases_o_batch_after_warmup(spark, tmp_path, monkeypatch):
         )
 
 
-def test_offset_bases_legacy_dir_falls_back_to_scan(spark, tmp_path):
-    """A committed dir without a watermark sidecar (pre-sidecar log)
-    forces the full-scan fallback — offsets stay dense either way."""
+def test_missing_sidecar_fails_loudly_and_leaves_log_unchanged(
+    spark, tmp_path
+):
+    """Every commit renames its ``_watermark.json`` in with its data,
+    so a committed dir without one is corrupt input: offsets cannot be
+    derived, and produce_batch must raise naming the missing file
+    rather than mint offsets — leaving no new batch dir and no staging
+    dir behind."""
     import os
 
     import divolte_collector_spark.sources.kafka_emulator as ke
     from divolte_collector_spark.streaming.sinks import kafka_frame
 
     log = str(tmp_path / "log")
-    ev = _mapped_events(spark, 20)
-    framed = kafka_frame(ev, _SCHEMA)
+    framed = kafka_frame(_mapped_events(spark, 20), _SCHEMA)
     produce_batch(spark, framed, log, "t", batch_id=0, n_partitions=3)
-    # strip the sidecar: simulates a legacy log
     data_dir = ke._data_dir(log, "t")
-    [batch_dir] = [d for d in os.listdir(data_dir) if d.startswith("batch=")]
-    os.unlink(os.path.join(data_dir, batch_dir, ke.WATERMARK_FILE))
+    [batch_dir] = ke._committed_dirs(data_dir)
+    sidecar = os.path.join(data_dir, batch_dir, ke.WATERMARK_FILE)
+
+    def _topic_rows():
+        return sorted(
+            (r.partition, r.offset, bytes(r.key), bytes(r.value))
+            for r in read_topic(spark, log, "t").collect()
+        )
+
+    first_rows = _topic_rows()
+    assert len(first_rows) == 20
+    os.unlink(sidecar)
+    # a fresh process: no in-memory watermark to fall back on
     ke._WATERMARK_CACHE.clear()
 
-    produce_batch(spark, framed, log, "t", batch_id=1, n_partitions=3)
-    rows = read_topic(spark, log, "t").collect()
-    assert len(rows) == 40
-    by_partition = {}
-    for r in rows:
-        by_partition.setdefault(r.partition, []).append(r.offset)
-    for p, offsets in by_partition.items():
-        assert sorted(offsets) == list(range(len(offsets)))
+    with pytest.raises(FileNotFoundError) as exc:
+        produce_batch(spark, framed, log, "t", batch_id=1, n_partitions=3)
+    assert exc.value.filename == sidecar
+    assert ke._committed_dirs(data_dir) == [batch_dir]
+    leftovers = [
+        d for d in os.listdir(os.path.join(log, "t"))
+        if d.startswith("_staging") or d == "_commit.lock"
+    ]
+    assert leftovers == []
+    assert _topic_rows() == first_rows
 
 
 def test_second_concurrent_producer_fences_the_first(spark, tmp_path):
@@ -362,52 +381,6 @@ def test_writer_fenced_mid_batch_does_not_commit(
         producer_epoch="writer-B",
     )
     assert len(read_topic(spark, log, "t").collect()) == 10
-
-
-def test_legacy_scan_runs_once_per_process(spark, tmp_path):
-    """REGRESSION (round-7 advice): with any legacy (pre-sidecar)
-    batch dir present, every produce_batch used to re-run the
-    full-history Spark scan. The scanned floor is cached per data_dir
-    (the legacy dir set is immutable on an append-only log), so the
-    scan runs once."""
-    import os
-
-    import divolte_collector_spark.sources.kafka_emulator as ke
-    from divolte_collector_spark.streaming.sinks import kafka_frame
-
-    log = str(tmp_path / "log")
-    ev = _mapped_events(spark, 12)
-    framed = kafka_frame(ev, _SCHEMA)
-    produce_batch(spark, framed, log, "t", batch_id=0, n_partitions=3)
-    data_dir = ke._data_dir(log, "t")
-    [batch_dir] = [d for d in os.listdir(data_dir) if d.startswith("batch=")]
-    os.unlink(os.path.join(data_dir, batch_dir, ke.WATERMARK_FILE))
-    ke._WATERMARK_CACHE.clear()
-    ke._LEGACY_FLOOR_CACHE.clear()
-
-    calls = []
-    real_scan = ke._offset_bases_scan
-
-    def counting_scan(*a, **k):
-        calls.append(1)
-        return real_scan(*a, **k)
-
-    orig = ke._offset_bases_scan
-    ke._offset_bases_scan = counting_scan
-    try:
-        produce_batch(spark, framed, log, "t", batch_id=1, n_partitions=3)
-        produce_batch(spark, framed, log, "t", batch_id=2, n_partitions=3)
-        produce_batch(spark, framed, log, "t", batch_id=3, n_partitions=3)
-    finally:
-        ke._offset_bases_scan = orig
-    assert len(calls) == 1, f"legacy scan ran {len(calls)}x, want 1"
-    rows = read_topic(spark, log, "t").collect()
-    assert len(rows) == 48
-    by_partition = {}
-    for r in rows:
-        by_partition.setdefault(r.partition, []).append(r.offset)
-    for p, offsets in by_partition.items():
-        assert sorted(offsets) == list(range(len(offsets)))
 
 
 def test_break_stale_lock_removes_only_the_measured_lock(tmp_path):
