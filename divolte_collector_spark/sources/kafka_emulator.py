@@ -18,19 +18,20 @@ Broker semantics emulated faithfully:
   the reference's flusher relies on (KafkaFlusher.java:53-101 keys
   every record by party id for exactly this affinity).
 - **Offsets**: per-partition, dense, monotonic across produce batches
-  and across PROCESSES. The Spark job writes the staged segment with
-  RELATIVE per-partition offsets; absolute offsets are assigned at
-  commit time, under a per-topic commit lock (atomic ``mkdir``), by a
-  driver-side pyarrow rebase — so the window between "derive bases"
-  and "commit" that could interleave with another producer does not
-  exist. Every committed batch dir carries a ``_watermark.json``
-  sidecar (written into the staging dir, so the SAME atomic rename
-  commits data and watermark together) holding the post-batch next
-  offsets; base derivation is an elementwise max over the sidecars
-  (cached in-process, validated by the committed-dir count so another
-  process's append is always noticed). A committed dir without a
-  sidecar is corrupt input: the produce fails with the missing path.
-  Produce cost stays O(batch) regardless of topic history.
+  and across PROCESSES. A batch is collected to the driver as one
+  Arrow table (the batch's only Spark job), and absolute offsets are
+  assigned there at commit time, under a per-topic commit lock
+  (atomic ``mkdir``) — so the window between "derive bases" and
+  "commit" that could interleave with another producer does not
+  exist. Every committed batch dir carries a
+  ``_watermark.json`` sidecar (written into the staging dir, so the
+  SAME atomic rename commits data and watermark together) holding the
+  post-batch next offsets; base derivation is an elementwise max over
+  the sidecars (cached in-process, validated by the committed-dir
+  count so another process's append is always noticed). A committed
+  dir without a sidecar is corrupt input: the produce fails with the
+  missing path. Produce cost stays O(batch) regardless of topic
+  history.
 - **Single active producer per topic — fenced at the commit point**:
   ``emulated_kafka_sink`` claims the topic (atomic
   ``_producer.claim`` replace); the claim is re-checked INSIDE the
@@ -40,7 +41,7 @@ Broker semantics emulated faithfully:
   callers without a claim are still offset-safe thanks to the commit
   lock — interleaved producers serialize; only zombie-writer
   DUPLICATE-delivery semantics need the claim.
-- **Atomic batch commit**: a batch's segment files are staged and then
+- **Atomic batch commit**: a batch's segment file is staged and then
   committed with ONE directory rename, so a concurrent streaming
   reader and the offset derivation never observe a partial batch.
 - **Replay within a producer run**: ``foreachBatch`` may redeliver a
@@ -53,8 +54,8 @@ Broker semantics emulated faithfully:
 
 This is harness infrastructure — per-batch driver-side work is one
 listdir + a tiny json read per committed dir (cache-validated) plus a
-per-part-file offset rebase bounded by the batch, never a scan of the
-log history.
+sort and one parquet write of the collected batch, never a scan of
+the log history. The driver holds the whole batch while it commits.
 """
 
 from __future__ import annotations
@@ -65,16 +66,15 @@ import shutil
 import time
 import uuid
 from contextlib import contextmanager
-from typing import Callable, Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 KAFKA_SCAN_SCHEMA = T.StructType(
     [
@@ -87,6 +87,10 @@ KAFKA_SCAN_SCHEMA = T.StructType(
         T.StructField("timestampType", T.IntegerType()),
     ]
 )
+
+# the segment file's schema: its timestamp is UTC-adjusted micros,
+# which Spark reads back as TIMESTAMP (an unadjusted one reads as NTZ)
+_SEGMENT_SCHEMA = to_arrow_schema(KAFKA_SCAN_SCHEMA)
 
 
 def murmur2(data: bytes) -> int:
@@ -139,7 +143,7 @@ WATERMARK_FILE = "_watermark.json"
 _WATERMARK_CACHE: dict[str, tuple[int, dict[int, int]]] = {}
 
 #: breaking threshold for a lock whose holder crashed. Hold times are
-#: bounded by the per-part streaming rebase of ONE batch, so a lock
+#: bounded by the sort and one parquet write of ONE batch, so a lock
 #: this old is a dead producer, not a slow one.
 _COMMIT_LOCK_STALE_S = 600.0
 
@@ -166,16 +170,16 @@ def _break_stale_lock(lock: str) -> None:
     — after verifying (owner token + mtime) that what it renamed is
     the same stale lock it measured. If the verification fails (the
     rename displaced a freshly re-acquired lock), the tombstone is
-    renamed straight back. With the in-hold mtime heartbeat (see
-    produce_batch) a LIVE holder is never measured stale in the first
-    place, so the restore path only runs on a holder that stalled past
+    renamed straight back. A live holder commits one batch in far less
+    than the threshold, so it is never measured stale in the first
+    place, and the restore path only runs on a holder that stalled past
     the threshold and woke at the worst instant."""
     try:
         pre_stat = os.stat(lock)
     except OSError:
         return  # released while we were deciding
     if time.time() - pre_stat.st_mtime <= _COMMIT_LOCK_STALE_S:
-        return  # re-measured young (heartbeat landed): not stale
+        return  # re-measured young (re-acquired meanwhile): not stale
     pre_owner = _read_owner(lock)
     tomb = f"{lock}.tomb.{uuid.uuid4().hex}"
     try:
@@ -203,7 +207,7 @@ def _break_stale_lock(lock: str) -> None:
         # rather than clobber the new lock. The displaced holder's
         # release becomes a silent no-op and it briefly overlaps the
         # new holder — reaching here requires a holder that stalled
-        # past the 600 s heartbeat threshold, woke inside the
+        # past the 600 s threshold, woke inside the
         # microsecond pre-stat→rename window, AND a waiter landing
         # inside the rename→restore window; accepted as the residual
         # of building on rename/mkdir atomicity alone.
@@ -213,11 +217,9 @@ def _break_stale_lock(lock: str) -> None:
 @contextmanager
 def _commit_lock(topic_dir: str, timeout: float = 900.0):
     """Per-topic commit mutex via atomic ``mkdir`` — held only for the
-    driver-side commit tail (sidecar base derivation, per-part offset
-    rebase, rename), never across the Spark job. Yields the lock path
-    so the holder can HEARTBEAT long holds (``os.utime`` per rebase
-    part file) — a live holder therefore never looks stale to waiters.
-    The holder writes an ``owner`` token inside the lock dir and
+    driver-side commit tail (sidecar base derivation, offset
+    assignment, the segment write, rename), never across the Spark
+    job. The holder writes an ``owner`` token inside the lock dir and
     releases ONLY its own lock — so breaking a stale
     lock can never cascade (the original holder returning late does
     not free the usurper's lock). ``timeout`` > stale threshold, so
@@ -244,7 +246,7 @@ def _commit_lock(topic_dir: str, timeout: float = 900.0):
                 raise TimeoutError(f"kafka emulator commit lock busy: {lock}")
             time.sleep(0.02)
     try:
-        yield lock
+        yield
     finally:
         try:  # release only OUR lock — never a usurper's
             with open(os.path.join(lock, "owner")) as fh:
@@ -308,75 +310,76 @@ def produce_batch(
 ) -> None:
     """Append one batch of (key, value) frames to the topic log.
 
-    Executor-side: partition assignment (murmur2 on the key bytes) and
-    the segment write with RELATIVE per-partition offsets. Driver-side,
-    under the topic's commit lock: base derivation, a pyarrow rebase to
-    absolute offsets (O(batch)), the watermark sidecar, the fencing
-    re-check, and one atomic directory rename — so no other producer's
-    commit can interleave between "derive bases" and "commit", in this
-    process or any other. A (producer_epoch, batch_id) that already
-    committed is dropped — idempotent replay within a producer run."""
+    One Spark job collects the frames as an Arrow table. The driver
+    then assigns each record its partition (murmur2 once per distinct
+    key; a null key goes to partition 0) and orders the batch by
+    (partition, key, value) bytes, nulls first — a Spark batch has no
+    producer send order, so the frame bytes make it deterministic.
+    Under the topic's commit lock: base derivation, absolute offsets
+    (base + rank within the partition), one segment file, the
+    watermark sidecar, the fencing re-check, and one atomic directory
+    rename — so no other producer's commit can interleave between
+    "derive bases" and "commit", in this process or any other. A
+    (producer_epoch, batch_id) that already committed is dropped —
+    idempotent replay within a producer run."""
     data_dir = _data_dir(log_dir, topic)
     os.makedirs(data_dir, exist_ok=True)
     commit_dir = os.path.join(data_dir, f"batch={producer_epoch}-{batch_id:010d}")
     if os.path.exists(commit_dir):
         return  # this batch already committed: replay, drop it
 
-    part_schema = T.StructType(
-        list(framed.select("key", "value").schema.fields)
-        + [T.StructField("partition", T.IntegerType())]
+    frames = framed.select("key", "value").toArrow()
+    key = frames.column("key").cast(pa.binary())
+    keys = pc.unique(key).drop_null()
+    # one hash per distinct key; the trailing 0 is the null key's slot
+    lut = np.array(
+        [partition_for_key(k, n_partitions) for k in keys.to_pylist()] + [0],
+        dtype=np.int32,
     )
-
-    def assign(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in iterator:
-            pdf = pdf[["key", "value"]].copy()
-            pdf["partition"] = [
-                partition_for_key(bytes(k), n_partitions)
-                if k is not None
-                else 0
-                for k in pdf["key"]
-            ]
-            yield pdf
-
-    assigned = framed.select("key", "value").mapInPandas(assign, part_schema)
-    # deterministic in-batch order (a Spark batch has no producer send
-    # order): sort by frame bytes within each partition
-    w = Window.partitionBy("partition").orderBy("key", "value")
-    segment = assigned.select(
-        "key",
-        "value",
-        F.lit(topic).alias("topic"),
-        "partition",
-        (F.row_number().over(w) - 1).cast("long").alias("offset"),
-        F.lit(None).cast("timestamp").alias("timestamp"),
-        F.lit(-1).alias("timestampType"),  # NO_TIMESTAMP_TYPE
+    slot = pc.fill_null(pc.index_in(key, keys), -1).to_numpy()
+    batch = pa.table(
+        {
+            "partition": lut[slot],
+            "key": key,
+            "value": frames.column("value").cast(pa.binary()),
+        }
     )
+    batch = batch.take(
+        pc.sort_indices(
+            batch,
+            sort_keys=[(c, "ascending") for c in batch.column_names],
+            null_placement="at_start",
+        )
+    )
+    part = batch.column("partition").to_numpy()
+    rank = np.arange(len(part)) - np.searchsorted(part, part)
     staging = os.path.join(log_dir, topic, f"_staging_{uuid.uuid4().hex}")
-    segment.write.mode("overwrite").parquet(staging)
-    for extra in os.listdir(staging):
-        if extra == "_SUCCESS" or extra.endswith(".crc"):
-            try:
-                os.unlink(os.path.join(staging, extra))
-            except FileNotFoundError:
-                pass
     try:
-        with _commit_lock(os.path.join(log_dir, topic)) as lock_path:
+        with _commit_lock(os.path.join(log_dir, topic)):
             if os.path.exists(commit_dir):  # replay raced us to commit
-                shutil.rmtree(staging, ignore_errors=True)
                 return
             bases = _offset_bases(data_dir, n_partitions)
-
-            def _heartbeat() -> None:
-                # refresh the lock mtime so a long (many-part) rebase
-                # never looks stale to waiting producers
-                try:
-                    os.utime(lock_path)
-                except OSError:
-                    pass
-
-            new_bases = _rebase_staged_offsets(
-                staging, bases, heartbeat=_heartbeat
+            base = np.array(
+                [bases[p] for p in range(n_partitions)], dtype=np.int64
             )
+            new_bases = dict(bases)
+            for p, n in zip(*np.unique(part, return_counts=True)):
+                new_bases[int(p)] = bases[int(p)] + int(n)
+            n_rows = len(part)
+            segment = pa.table(
+                [
+                    batch.column("key"),
+                    batch.column("value"),
+                    pa.repeat(topic, n_rows),
+                    batch.column("partition"),
+                    base[part] + rank,
+                    pa.nulls(n_rows, _SEGMENT_SCHEMA.field("timestamp").type),
+                    np.full(n_rows, -1, dtype=np.int32),  # NO_TIMESTAMP_TYPE
+                ],
+                schema=_SEGMENT_SCHEMA,
+            )
+            os.mkdir(staging)
+            pq.write_table(segment, os.path.join(staging, "part-00000.parquet"))
             with open(os.path.join(staging, WATERMARK_FILE), "w") as fh:
                 json.dump({str(p): n for p, n in new_bases.items()}, fh)
             # fencing re-check at the commit point: a writer fenced
@@ -392,63 +395,6 @@ def produce_batch(
         shutil.rmtree(staging, ignore_errors=True)
         _WATERMARK_CACHE.pop(data_dir, None)
         raise
-
-
-def _rebase_staged_offsets(
-    staging: str,
-    bases: dict[int, int],
-    heartbeat: Callable[[], None] | None = None,
-) -> dict[int, int]:
-    """Rewrite the staged segment's RELATIVE offsets to absolute ones
-    (offset += bases[partition]) and return the post-batch watermark.
-    Driver-side pyarrow, streamed ONE PART FILE at a time — driver
-    memory is bounded by the largest part (the executor write size),
-    never the whole batch, and no Spark job runs. Each rewritten file
-    replaces its original inside the (invisible) staging dir, so the
-    commit rename publishes only consistent absolute offsets.
-    ``heartbeat`` (the commit lock's mtime refresh) fires once per
-    part file, so however many parts the batch has, the lock's age
-    stays bounded by one part's rewrite time."""
-    new_bases = dict(bases)
-    for f in sorted(os.listdir(staging)):
-        if heartbeat is not None:
-            heartbeat()
-        if not f.endswith(".parquet"):
-            continue
-        path = os.path.join(staging, f)
-        tbl = pq.read_table(path)
-        if not tbl.num_rows:
-            continue
-        part_np = tbl.column("partition").to_numpy()
-        rel_np = tbl.column("offset").to_numpy()
-        lut = np.array(
-            [bases.get(p, 0) for p in range(int(part_np.max()) + 1)],
-            dtype="int64",
-        )
-        abs_np = rel_np + lut[part_np]
-        idx = tbl.schema.get_field_index("offset")
-        tbl = tbl.set_column(
-            idx, tbl.schema.field(idx), pa.array(abs_np, type=pa.int64())
-        )
-        # pin the timestamp column to UTC-adjusted micros: the arrow
-        # roundtrip drops Spark's isAdjustedToUTC annotation on the
-        # all-null column, and Spark would read the rewritten file as
-        # TIMESTAMP_NTZ — a scan-schema mismatch
-        tidx = tbl.schema.get_field_index("timestamp")
-        tbl = tbl.set_column(
-            tidx,
-            pa.field("timestamp", pa.timestamp("us", tz="UTC")),
-            tbl.column("timestamp").cast(pa.timestamp("us", tz="UTC")),
-        )
-        for p in np.unique(part_np):
-            sel = abs_np[part_np == p]
-            new_bases[int(p)] = max(
-                new_bases.get(int(p), 0), int(sel.max()) + 1
-            )
-        tmp = path + ".rebase"
-        pq.write_table(tbl, tmp)
-        os.replace(tmp, path)
-    return new_bases
 
 
 def claim_topic(log_dir: str, topic: str, epoch: str) -> None:

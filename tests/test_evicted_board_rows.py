@@ -20,6 +20,7 @@ from __future__ import annotations
 import glob
 import importlib.util
 import json
+import os
 
 import duckdb
 import pytest
@@ -27,6 +28,7 @@ import pytest
 from divolte_collector_spark.queries import alias_map, all_queries
 
 SF_DIR = "/root/testdata/sf0.001"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -36,7 +38,7 @@ _TABLES = (
 
 def _check_oracle():
     spec = importlib.util.spec_from_file_location(
-        "check_oracle", "/root/repo/tools/check_oracle.py"
+        "check_oracle", os.path.join(ROOT, "tools", "check_oracle.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
@@ -48,7 +50,7 @@ def _evicted_names() -> list[str]:
     qs = sorted(all_queries())
     window = set(qs[:50])
     ever: set[str] = set()
-    for f in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for f in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
         ever |= set(json.load(open(f)).keys())
     canon = {am.get(n, n) for n in ever}
     unknown = canon - set(qs)

@@ -6,7 +6,7 @@ The emulator produces the EXACT kafka scan schema, so everything under
 test — kafka_frame's byte framing, decode_kafka_events, the mapping
 topology — is the production code path; only the broker transport is
 swapped. Partitioning parity is pinned against Kafka's default
-partitioner (murmur2 reference vectors from the public algorithm).
+partitioner (murmur2 reference vectors from Kafka's own test suite).
 """
 
 from __future__ import annotations
@@ -37,8 +37,20 @@ _SCHEMA = {
 
 
 def test_murmur2_known_vectors():
-    """Kafka's murmur2 on reference inputs (computed from the public
-    algorithm definition; stable across any compliant implementation)."""
+    """Kafka's murmur2 on the reference vectors of Kafka's
+    ``UtilsTest.testMurmur2``, which compares signed 32-bit ints."""
+    vectors = {
+        "21": -973932308,
+        "foobar": -790332482,
+        "a-little-bit-long-string": -985981536,
+        "a-little-bit-longer-string": -1486304829,
+        "lkjh234lh9fiuh90y23oiuhsafujhadof229phr9h19h89h8": -58897971,
+        "abc": 479470107,
+    }
+    for text, expected in vectors.items():
+        h = murmur2(text.encode())
+        signed = h - (1 << 32) if h >= 1 << 31 else h
+        assert signed == expected, text
     # the empty-input value falls straight through the finalizer:
     h = 0x9747B28C
     m = 0x5BD1E995
@@ -93,6 +105,21 @@ def test_produce_scan_decode_roundtrip(spark, tmp_path):
         assert r.party_id == src[eid].party_id
         assert r.event_type == src[eid].event_type
         assert r.client_ms == src[eid].client_ms
+
+
+def test_produce_batch_runs_one_spark_job(spark, tmp_path):
+    """The collect that feeds the driver-side commit (and runs
+    kafka_frame's encode) is the batch's only Spark job."""
+    from divolte_collector_spark.streaming.sinks import kafka_frame
+
+    sc = spark.sparkContext
+    framed = kafka_frame(_mapped_events(spark), _SCHEMA)
+    sc.setJobGroup("produce_batch_jobs", "produce_batch")
+    try:
+        produce_batch(spark, framed, str(tmp_path / "log"), "t", batch_id=0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("produce_batch_jobs")) == 1
 
 
 def test_party_partition_affinity_and_offsets(spark, tmp_path):
@@ -438,31 +465,150 @@ def test_break_stale_lock_removes_only_the_measured_lock(tmp_path):
         assert fh.read() == "even-fresher"
 
 
-def test_rebase_heartbeat_fires_per_part_file(tmp_path):
-    """The commit-lock heartbeat runs once per staged file, so lock
-    age stays bounded by one part's rewrite time."""
+_NULLABLE_PARTY = {
+    **_SCHEMA,
+    "fields": [
+        {"name": "party_id", "type": ["null", "string"], "default": None}
+    ]
+    + _SCHEMA["fields"][1:],
+}
+
+
+def test_null_keys_go_to_partition_zero_in_byte_order(spark, tmp_path):
+    """A null party id frames a null key, which the partitioner sends to
+    partition 0. Within each batch and partition, offsets follow the
+    (key, value) byte order with nulls first; offsets stay dense across
+    batches; and the consumer's key audit accepts every record."""
+    from divolte_collector_spark.streaming.sinks import kafka_frame
+
+    log = str(tmp_path / "log")
+    ev = _mapped_events(spark, 40).withColumn(
+        "party_id",
+        F.when(F.col("client_ms") % 500 == 0, F.lit(None)).otherwise(
+            F.col("party_id")
+        ),
+    )
+    framed = kafka_frame(ev, _NULLABLE_PARTY)
+    produce_batch(spark, framed, log, "t", batch_id=0, n_partitions=3)
+    produce_batch(spark, framed, log, "t", batch_id=1, n_partitions=3)
+
+    topic = read_topic(spark, log, "t")
+    rows = topic.select(
+        "*", F.col("_metadata.file_path").alias("file")
+    ).collect()
+    assert len(rows) == 80
+    null_keyed = [r for r in rows if r.key is None]
+    assert len(null_keyed) == 2 * 8
+    assert {r.partition for r in null_keyed} == {0}
+    by_partition = {}
+    by_segment = {}
+    for r in rows:
+        by_partition.setdefault(r.partition, []).append(r.offset)
+        by_segment.setdefault((r.file, r.partition), []).append(r)
+    for p, offsets in by_partition.items():
+        assert sorted(offsets) == list(range(len(offsets))), p
+    for seg in by_segment.values():
+        in_offset_order = [
+            (r.key is not None, bytes(r.key or b""), bytes(r.value))
+            for r in sorted(seg, key=lambda r: r.offset)
+        ]
+        assert in_offset_order == sorted(in_offset_order)
+
+    decoded = decode_kafka_events(topic, _NULLABLE_PARTY, verify_key=True)
+    audit = decoded.select("party_id", "_key_matches").collect()
+    assert len(audit) == 80
+    assert all(r._key_matches is True for r in audit)
+    assert sum(r.party_id is None for r in audit) == 16
+
+
+def test_sink_crash_after_produce_redelivers_under_new_epoch(
+    spark, tmp_path, monkeypatch
+):
+    """Crash-and-restart for ``emulated_kafka_sink``: ``foreachBatch``
+    fails after ``produce_batch`` committed batch 1 but before Spark
+    committed its offset. A restart on the same checkpoint redelivers
+    batch 1 under a new producer epoch. No event is lost; the only
+    duplicates are batch 1's records, byte for byte; offsets stay
+    dense. A replay of batch 1 within the first run is dropped."""
+    import glob
     import os
 
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     import divolte_collector_spark.sources.kafka_emulator as ke
 
-    staging = str(tmp_path / "staging")
-    os.makedirs(staging)
-    tbl = pa.table(
-        {
-            "key": pa.array([b"k"], pa.binary()),
-            "value": pa.array([b"v"], pa.binary()),
-            "topic": pa.array(["t"], pa.string()),
-            "partition": pa.array([0], pa.int32()),
-            "offset": pa.array([0], pa.int64()),
-            "timestamp": pa.array([None], pa.timestamp("us", tz="UTC")),
-            "timestampType": pa.array([-1], pa.int32()),
-        }
+    src_dir = str(tmp_path / "src")
+    log = str(tmp_path / "log")
+    ckpt = str(tmp_path / "ckpt")
+    ev = _mapped_events(spark, 30)
+    ev.repartition(3).write.mode("overwrite").json(src_dir)
+
+    real_produce = ke.produce_batch
+    crashed = []
+
+    def produce_then_crash(spark_, framed, log_dir, topic, batch_id, **kw):
+        real_produce(spark_, framed, log_dir, topic, batch_id, **kw)
+        if batch_id == 1 and not crashed:
+            # a redelivery within the same producer run: dropped
+            real_produce(spark_, framed, log_dir, topic, batch_id, **kw)
+            crashed.append(kw["producer_epoch"])
+            raise RuntimeError("crash between produce and offset commit")
+
+    monkeypatch.setattr(ke, "produce_batch", produce_then_crash)
+
+    def run():
+        stream = (
+            spark.readStream.schema(
+                "party_id string, event_id string, event_type string, "
+                "client_ms long"
+            )
+            .option("maxFilesPerTrigger", "1")
+            .json(src_dir)
+        )
+        q = (
+            ke.emulated_kafka_sink(stream, log, "t", ckpt, _SCHEMA)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(600)
+        return q
+
+    with pytest.raises(Exception, match="crash between produce"):
+        run()
+    q = run()
+    assert q.exception() is None
+
+    data_dir = ke._data_dir(log, "t")
+    segments = {}
+    for d in ke._committed_dirs(data_dir):
+        epoch, batch_id = d[len("batch="):].rsplit("-", 1)
+        [path] = glob.glob(os.path.join(data_dir, d, "*.parquet"))
+        tbl = pq.read_table(path)
+        segments[(epoch, int(batch_id))] = sorted(
+            zip(tbl.column("key").to_pylist(), tbl.column("value").to_pylist())
+        )
+    [first] = crashed
+    [second] = {e for e, _ in segments} - {first}
+    assert set(segments) == {
+        (first, 0), (first, 1), (second, 1), (second, 2)
+    }
+    assert segments[(first, 1)] == segments[(second, 1)]
+    assert segments[(first, 1)]
+
+    topic = read_topic(spark, log, "t")
+    counts = {}
+    for r in decode_kafka_events(topic, _SCHEMA).collect():
+        counts[r.event_id] = counts.get(r.event_id, 0) + 1
+    assert set(counts) == {r.event_id for r in ev.collect()}
+    batch_1 = topic.where(
+        F.col("_metadata.file_path").contains(f"batch={first}-{1:010d}/")
     )
-    pq.write_table(tbl, os.path.join(staging, "part-0.parquet"))
-    pq.write_table(tbl, os.path.join(staging, "part-1.parquet"))
-    beats = []
-    ke._rebase_staged_offsets(staging, {0: 5}, heartbeat=lambda: beats.append(1))
-    assert len(beats) >= 2
+    assert {eid for eid, n in counts.items() if n > 1} == {
+        r.event_id for r in decode_kafka_events(batch_1, _SCHEMA).collect()
+    }
+    assert max(counts.values()) == 2
+    by_partition = {}
+    for r in topic.select("partition", "offset").collect():
+        by_partition.setdefault(r.partition, []).append(r.offset)
+    for p, offsets in by_partition.items():
+        assert sorted(offsets) == list(range(len(offsets))), p

@@ -12,6 +12,7 @@ negative zero at all (``+ F.lit(0.0)`` normalizes it).
 from __future__ import annotations
 
 import importlib.util
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -20,11 +21,12 @@ from pyspark.sql.types import DoubleType, FloatType
 from divolte_collector_spark.queries import all_queries
 
 SF_DIR = "/root/testdata/sf0.001"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _load_check_oracle():
     spec = importlib.util.spec_from_file_location(
-        "check_oracle", "/root/repo/tools/check_oracle.py"
+        "check_oracle", os.path.join(ROOT, "tools", "check_oracle.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
@@ -202,7 +204,7 @@ def test_parallel_norm_rows_matches_serial():
 
     # a real import (not _load_check_oracle): the fork pool resolves
     # _norm_chunk by module name, so the module must be in sys.modules
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(ROOT, "tools"))
     import check_oracle as co
 
     rows = []

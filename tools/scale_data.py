@@ -31,9 +31,11 @@ Usage: python tools/scale_data.py K [out_dir]   (default /tmp/sfscale_K)
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
 
